@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session facade — the Spark-native equivalent of the reference's
   * session context (`/root/reference/src/main.rs:379-386`, registered as
@@ -59,9 +60,61 @@ object Engine {
     * support in but never registers a reader — `/root/reference/Cargo.lock:2286-2288`).
     * Parquet is the scale path: columnar, predicate/projection pushdown,
     * partition pruning all reach the scan.
+    *
+    * The one parquet reader of the engine ([[table]] and the query
+    * registry's table reads go through it). Spark infers a parquet
+    * schema with a footer-reading Spark job on every `read.parquet`,
+    * even for one file; the DataFusion session this mirrors resolves a
+    * table's schema once. So a plain FILE's schema is inferred by Spark
+    * on its first read and remembered, and later reads pass it as the
+    * user schema: each read still builds a fresh relation (fresh
+    * attribute ids, fresh file listing), only the footer job is gone.
+    * See `ParquetFileKey` for what invalidates an entry. Directories
+    * and missing paths always take Spark's own inference: Spark writers
+    * produce directories and rewrite them in place.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    parquetFileKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        Option(parquetSchemas.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            // infer OUTSIDE the map (no computeIfAbsent): concurrent
+            // readers may each infer once, the first put wins
+            val df = spark.read.parquet(path)
+            parquetSchemas.putIfAbsent(key, df.schema)
+            df
+        }
+    }
+
+  /** Cache key of a plain parquet file's inferred schema: the qualified
+    * path, the file's length and mtime (a rewrite changes one of them),
+    * and every `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` conf
+    * the session has set — those decide how footers map to Spark types
+    * (`nanosAsLong` and NTZ inference change `events.ts`). The confs are
+    * taken from the session as data, not from a list of names.
+    */
+  private final case class ParquetFileKey(path: String, length: Long, mtime: Long,
+      confs: Map[String, String])
+
+  private val parquetConfPrefixes = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
+
+  private val parquetSchemas =
+    new java.util.concurrent.ConcurrentHashMap[ParquetFileKey, StructType]()
+
+  /** `path`'s cache key; None for a directory or a missing path. */
+  private def parquetFileKey(spark: SparkSession, path: String): Option[ParquetFileKey] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val status =
+      try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      val confs = spark.conf.getAll.filter { case (k, _) => parquetConfPrefixes.exists(k.startsWith) }
+      ParquetFileKey(st.getPath.toString, st.getLen, st.getModificationTime, confs)
+    }
+  }
 
   def readJson(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
@@ -86,7 +139,7 @@ object Engine {
 
   /** Driver-testdata helper: one parquet file per table under `dir`. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
 
   /** Sinks (capability superset — the reference has display-only sinks:
     * `df/show` `src/main.rs:552-559`, `df/collect` `src/main.rs:523-531`).
@@ -202,7 +255,7 @@ object Engine {
 
   def fromArrowBatches(spark: SparkSession,
       batches: org.apache.spark.rdd.RDD[Array[Byte]],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+      schema: StructType): DataFrame =
     org.apache.spark.sql.graft.Bridge.fromArrowBatchRdd(spark, batches, schema)
 
   /** Plain (unbucketed) catalog table — the registration ANALYZE TABLE and

@@ -42,7 +42,7 @@ object SparkEntry {
       sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/root/repo/target/graft-scratch"))
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = Engine.table(s, dir, name)
     // events.ts has shipped as TIMESTAMP(NANOS) (read as int64 under
     // spark.sql.legacy.parquet.nanosAsLong) and as tz-naive
     // TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ under default NTZ
@@ -52,6 +52,28 @@ object SparkEntry {
     if (name == "events")
       graft.streaming.EventStreams.normalizeTs(df.schema, df)
     else df
+  }
+
+  /** Run a streaming drain over a private copy of `events.parquet`:
+    * FileStreamSource reads directories, so the single-file table is
+    * staged into a fresh temp dir, deleted again when `run` returns (every
+    * drain materializes its result first). `run` gets the staged dir, the
+    * source file's schema from [[Engine.readParquet]]'s cache (the copy is
+    * byte-identical, so the stream skips its own inference job) and a
+    * unique streaming query name.
+    */
+  private[graft] def withStagedEvents(s: SparkSession, dir: String, tag: String)(
+      run: (String, StructType, String) => DataFrame): DataFrame = {
+    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+    val schema = Engine.readParquet(s, src.toString).schema
+    val staged = java.nio.file.Files.createTempDirectory(s"graft_$tag")
+    java.nio.file.Files.copy(src, staged.resolve("events.parquet"))
+    val qn = s"graft_${tag}_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    try run(staged.toString, schema, qn)
+    finally {
+      java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
+      java.nio.file.Files.deleteIfExists(staged)
+    }
   }
 
   /** [[graft.operators.Relational.spread]] re-exported for the query

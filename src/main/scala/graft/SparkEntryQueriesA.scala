@@ -12,7 +12,8 @@ import graft.operators.Relational
 import graft.operators.Relational.GraftOps
 import graft.streaming.EventStreams
 
-import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced}
+import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced,
+  withStagedEvents}
 
 /** [[SparkEntry.queries]] part: 213 entries, q01_select .. q370_boruvka_mst. Mechanical split
   * of the single registry map (round 12) — entry order, bodies, and keys
@@ -509,18 +510,11 @@ private[graft] object SparkEntryQueriesA {
       // intra-batch-order-dependent, so the query projects the key columns
       // only — making the result exactly DISTINCT(user_id, event_type) and
       // hash-matchable.
-      val staged = java.nio.file.Files.createTempDirectory("graft_q49")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q49_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runDedupSmoke(s, staged.toString, qn, Seq("user_id", "event_type"))
+      withStagedEvents(s, dir, "q49") { (staged, schema, qn) =>
+        EventStreams.runDedupSmoke(s, staged, qn, Seq("user_id", "event_type"),
+            sourceSchema = Some(schema))
           .selectCols(Seq(col("user_id"), col("event_type")))
           .sortBy(Seq(col("user_id"), col("event_type")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -530,19 +524,10 @@ private[graft] object SparkEntryQueriesA {
       // directory, so the single-file table is staged into a temp dir; one
       // input file => one micro-batch => deterministic output: every session
       // except each user's last (still open at drain time).
-      val staged = java.nio.file.Files.createTempDirectory("graft_q42")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q42_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runSessionizeSmoke(s, staged.toString, qn, gapMinutes = 30)
+      withStagedEvents(s, dir, "q42") { (staged, schema, qn) =>
+        EventStreams.runSessionizeSmoke(s, staged, qn, gapMinutes = 30, sourceSchema = Some(schema))
           .selectCols(Seq(col("user_id"), col("session_seq"), col("start_us"), col("end_us"), col("n_events")))
           .sortBy(Seq(col("user_id"), col("session_seq")))
-      } finally {
-        // the drain materialized its result, so the staged copy can go
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -693,15 +678,11 @@ private[graft] object SparkEntryQueriesA {
       // min, same user) drained through a memory sink. Inner-join output is
       // append-only and watermark-independent for a finite drain, so the
       // result equals the batch join — replayed verbatim by the oracle.
-      val staged = java.nio.file.Files.createTempDirectory("graft_q71")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q71_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runStreamJoinSmoke(s, staged.toString, qn,
+      withStagedEvents(s, dir, "q71") { (staged, schema, qn) =>
+        EventStreams.runStreamJoinSmoke(s, staged, qn,
             Seq("user_id"), leftType = "click", rightType = "purchase",
-            windowSeconds = 1800)
+            windowSeconds = 1800,
+            sourceSchema = Some(schema))
           .selectCols(Seq(
             col("l_user_id").as("user_id"),
             col("l_event_id").as("click_id"),
@@ -709,9 +690,6 @@ private[graft] object SparkEntryQueriesA {
             unix_micros(col("l_ts")).as("click_us"),
             unix_micros(col("r_ts")).as("purchase_us")))
           .sortBy(Seq(col("user_id"), col("click_id"), col("purchase_id")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -1779,21 +1757,13 @@ private[graft] object SparkEntryQueriesA {
       // batch-side. The hash match proves the streaming aggregation path
       // equals the batch tumbling counts exactly (q40's windowed family,
       // now as a streaming driver fact). FileStreamSource needs a
-      // directory — q42's staging idiom
-      val staged = java.nio.file.Files.createTempDirectory("graft_q172")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"g172_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runWindowedTopK(s, staged.toString, qn, "1 hour", k = 3)
+      // directory — the shared withStagedEvents staging
+      withStagedEvents(s, dir, "q172") { (staged, schema, qn) =>
+        EventStreams.runWindowedTopK(s, staged, qn, "1 hour", k = 3, sourceSchema = Some(schema))
           .selectCols(Seq(
             unix_micros(col("win_start").cast("timestamp")).as("win_us"),
             col("event_type"), col("n"), col("rank")))
           .sortBy(Seq(col("win_us"), col("rank")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 

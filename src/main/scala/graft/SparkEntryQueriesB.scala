@@ -12,7 +12,8 @@ import graft.operators.Relational
 import graft.operators.Relational.GraftOps
 import graft.streaming.EventStreams
 
-import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced}
+import graft.SparkEntry.{t, pqFixture, dsum, q1Pricing, scratchRoot, spread, tfidfBigramVecs, bucketedRevenue, skewRebalanced,
+  withStagedEvents}
 
 /** [[SparkEntry.queries]] part: 196 entries, q371_concentration .. q65_centroid_assign. Mechanical split
   * of the single registry map (round 12) — entry order, bodies, and keys
@@ -738,22 +739,15 @@ private[graft] object SparkEntryQueriesB {
       // OHLC aggregate in complete mode — min_by/max_by state is one
       // (order, value) pair per group; the oracle is the batch SQL
       // verbatim (stream == batch is the claim)
-      val staged = java.nio.file.Files.createTempDirectory("graft_q308")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q308_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runOhlcStreamSmoke(s, staged.toString, qn,
+      withStagedEvents(s, dir, "q308") { (staged, schema, qn) =>
+        EventStreams.runOhlcStreamSmoke(s, staged, qn,
             "event_type", "event_id",
-            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
+            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)",
+            sourceSchema = Some(schema))
           .selectCols(Seq(col("key"), unix_micros(col("bucket")).as("bucket_us"),
             col("n"), col("open"), col("close"), col("high"), col("low"),
             col("sum_v")))
           .sortBy(Seq(col("key"), col("bucket_us")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -1739,18 +1733,11 @@ private[graft] object SparkEntryQueriesB {
       // drained through the identical batch drift decoration against the
       // even-user reference — stream == batch, and the oracle replays the
       // batch shape
-      val staged = java.nio.file.Files.createTempDirectory("graft_q255")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q255_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runDriftStreamSmoke(s, staged.toString, qn,
-            "event_type", "user_id % 2 = 0", "user_id % 2 = 1")
+      withStagedEvents(s, dir, "q255") { (staged, schema, qn) =>
+        EventStreams.runDriftStreamSmoke(s, staged, qn,
+            "event_type", "user_id % 2 = 0", "user_id % 2 = 1",
+            sourceSchema = Some(schema))
           .sortBy(Seq(col("category")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -1900,18 +1887,11 @@ private[graft] object SparkEntryQueriesB {
       // counts as a complete-mode streaming aggregation (9 longs of state),
       // drained through the identical batch decoration — the oracle is
       // q234's, row for row
-      val staged = java.nio.file.Files.createTempDirectory("graft_q243")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q243_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runBenfordStreamSmoke(s, staged.toString, qn,
-            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
+      withStagedEvents(s, dir, "q243") { (staged, schema, qn) =>
+        EventStreams.runBenfordStreamSmoke(s, staged, qn,
+            "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)",
+            sourceSchema = Some(schema))
           .sortBy(Seq(col("digit")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -2450,21 +2430,14 @@ private[graft] object SparkEntryQueriesB {
       // REACHED stage. Day windows the watermark never passes stay open
       // and emit nothing — the q42 last-session contract — and the oracle
       // replays the cascade for exactly the closed days.
-      val staged = java.nio.file.Files.createTempDirectory("graft_q207")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q207_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runFunnelSmoke(s, staged.toString, qn, Seq(
+      withStagedEvents(s, dir, "q207") { (staged, schema, qn) =>
+        EventStreams.runFunnelSmoke(s, staged, qn, Seq(
             "view" -> (col("event_type") === "view"),
             "click" -> (col("event_type") === "click"),
-            "purchase" -> (col("event_type") === "purchase")))
+            "purchase" -> (col("event_type") === "purchase")),
+            sourceSchema = Some(schema))
           .selectCols(Seq(col("user_id"), col("win_us"), col("stage"), col("t_us")))
           .sortBy(Seq(col("user_id"), col("win_us"), col("stage")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -2633,22 +2606,15 @@ private[graft] object SparkEntryQueriesB {
       // rule-count-sized state): the final per-batch report must equal the
       // batch report over the same events — which is what the oracle
       // computes. Mixed pass/fail rules on live data (value cap fires).
-      val staged = java.nio.file.Files.createTempDirectory("graft_q196")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q196_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
-        EventStreams.runValidationGateSmoke(s, staged.toString, qn, Seq(
+      withStagedEvents(s, dir, "q196") { (staged, schema, qn) =>
+        EventStreams.runValidationGateSmoke(s, staged, qn, Seq(
             "type_domain" -> !col("event_type").isin(
               "click", "error", "purchase", "signup", "view"),
             "user_complete" -> col("user_id").isNull,
             "value_cap_400" -> (col("value") > 400.0),
-            "value_positive" -> (col("value") <= 0.0)))
+            "value_positive" -> (col("value") <= 0.0)),
+            sourceSchema = Some(schema))
           .sortBy(Seq(col("rule")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 
@@ -3231,22 +3197,15 @@ private[graft] object SparkEntryQueriesB {
       // TRUE streaming stateless enrichment: the events file stream joins
       // the static customer dim (broadcast per micro-batch, no state
       // stores); append output equals the batch left join => exact oracle
-      val staged = java.nio.file.Files.createTempDirectory("graft_q98")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val qn = s"graft_q98_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-      try {
+      withStagedEvents(s, dir, "q98") { (staged, schema, qn) =>
         val dim = t(s, dir, "customer")
           .selectCols(Seq(col("c_custkey").as("user_id"),
             col("c_mktsegment"), col("c_nationkey")))
-        EventStreams.runStreamEnrichSmoke(s, staged.toString, qn, dim, Seq("user_id"))
+        EventStreams.runStreamEnrichSmoke(s, staged, qn, dim, Seq("user_id"),
+            sourceSchema = Some(schema))
           .selectCols(Seq(col("event_id"), col("user_id"), col("event_type"),
             col("c_mktsegment"), col("c_nationkey")))
           .sortBy(Seq(col("event_id")))
-      } finally {
-        java.nio.file.Files.deleteIfExists(staged.resolve("events.parquet"))
-        java.nio.file.Files.deleteIfExists(staged)
       }
     }),
 

@@ -1303,9 +1303,16 @@ object Relational {
     * output on every input — NULL takes every `otherwise` branch down to
     * bucket 0, matching the HOF's null-dropping filter; duplicates in a
     * non-decreasing array keep the prefix property the search needs.
+    * Unsorted bounds would silently mis-bucket (the search, unlike the
+    * HOF, depends on the order), so they are rejected up front.
     */
   def probeBucket(v: Column, bounds: Seq[Long], strict: Boolean = false): Column = {
     val b = bounds.toIndexedSeq
+    val descent = b.indices.drop(1).find(i => b(i - 1) > b(i))
+    require(descent.isEmpty, {
+      val i = descent.get
+      s"probeBucket bounds must be non-decreasing: bounds(${i - 1}) = ${b(i - 1)} > bounds($i) = ${b(i)}"
+    })
     def go(lo: Int, hi: Int): Column =
       if (lo == hi) lit(lo)
       else {

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming extension (the reference has NO streaming surface —
   * SURVEY.md §2.6; this is the beyond-parity path for the `events` table).
@@ -14,6 +15,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark for state eviction — for the windowed aggregations that bound
   * keeps state finite; [[sessionizeStream]]'s counter retention is the one
   * deliberate exception (O(distinct users), see its Scaladoc tradeoff).
+  *
+  * The `run*Smoke` drains over a staged copy of a table take an optional
+  * `sourceSchema`: the schema the caller already has for the copied file
+  * (`SparkEntry.withStagedEvents`). Without it they infer the staged
+  * directory's schema, which costs a footer-reading Spark job.
   */
 object EventStreams {
 
@@ -248,8 +254,9 @@ object EventStreams {
     * memory sink — the [[runSessionizeSmoke]] pattern.
     */
   def runFunnelSmoke(spark: SparkSession, parquetPath: String, queryName: String,
-      stages: Seq[(String, Column)], winMicros: Long = 86400000000L): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      stages: Seq[(String, Column)], winMicros: Long = 86400000000L,
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val stream = normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
         ("spark.sql.streaming.noDataMicroBatches.enabled" -> "true")) {
@@ -364,8 +371,9 @@ object EventStreams {
     * path explicitly with a two-batch run.)
     */
   def runSessionizeSmoke(spark: SparkSession, parquetPath: String, queryName: String,
-      gapMinutes: Int = 30, noDataBatches: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      gapMinutes: Int = 30, noDataBatches: Boolean = false,
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     withConfs(spark, eventSmokeConfs(spark, parquetPath) :+
@@ -397,9 +405,10 @@ object EventStreams {
     * tiny (distinct event types), the stream did the heavy counting.
     */
   def runWindowedTopK(spark: SparkSession, parquetPath: String,
-      queryName: String, windowLen: String = "1 hour", k: Int = 3): DataFrame = {
+      queryName: String, windowLen: String = "1 hour", k: Int = 3,
+      sourceSchema: Option[StructType] = None): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val drained = withConfs(spark, smokeConfs(spark, parquetPath)) {
@@ -863,8 +872,9 @@ object EventStreams {
     * a deterministic result project the key columns only.
     */
   def runDedupSmoke(spark: SparkSession, parquetPath: String, queryName: String,
-      keyCols: Seq[String]): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      keyCols: Seq[String],
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     withConfs(spark, eventSmokeConfs(spark, parquetPath)) {
@@ -898,10 +908,11 @@ object EventStreams {
     * verification harness only.
     */
   def runValidationGateSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, rules: Seq[(String, Column)]): DataFrame = {
+      queryName: String, rules: Seq[(String, Column)],
+      sourceSchema: Option[StructType] = None): DataFrame = {
     import graft.operators.Validation
     require(rules.nonEmpty, "validation gate needs at least one rule")
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val aggs = Validation.rulesAgg(rules)
@@ -971,8 +982,9 @@ object EventStreams {
     */
   def runOhlcStreamSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, keyCol: String, tieCol: String,
-      valueExpr: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      valueExpr: String,
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = normalizeTs(schema,
       spark.readStream.schema(schema).parquet(parquetPath))
     val ord = struct(col("ts").alias("t"), col(tieCol).alias("tb"))
@@ -1008,8 +1020,9 @@ object EventStreams {
     * smokes.
     */
   def runBenfordStreamSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, valueExpr: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      queryName: String, valueExpr: String,
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     withConfs(spark, smokeConfs(spark, parquetPath)) {
       val q = raw.select(expr(valueExpr).cast("long").alias("v"))
@@ -1042,8 +1055,9 @@ object EventStreams {
     */
   def runDriftStreamSmoke(spark: SparkSession, parquetPath: String,
       queryName: String, category: String, refFilter: String,
-      curFilter: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      curFilter: String,
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val curCounts = withConfs(spark, smokeConfs(spark, parquetPath)) {
       val q = raw.filter(expr(curFilter))
@@ -1063,7 +1077,7 @@ object EventStreams {
       spark.catalog.dropTempView(queryName)
       out
     }
-    val refDf = spark.read.parquet(parquetPath).filter(expr(refFilter))
+    val refDf = spark.read.schema(schema).parquet(parquetPath).filter(expr(refFilter))
       .groupBy(col(category).alias("category"))
       .agg(count(lit(1)).alias("n_ref"))
     val refRows = java.util.Arrays.asList(refDf.collect(): _*)
@@ -1153,8 +1167,9 @@ object EventStreams {
     * deterministic, equals the batch left join (the differential oracle).
     */
   def runStreamEnrichSmoke(spark: SparkSession, parquetPath: String,
-      queryName: String, dim: DataFrame, keys: Seq[String]): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      queryName: String, dim: DataFrame, keys: Seq[String],
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     val raw = spark.readStream.schema(schema).parquet(parquetPath)
     val stream = normalizeTs(schema, raw)
     val q = streamStaticEnrich(stream, dim, keys).writeStream
@@ -1631,8 +1646,9 @@ object EventStreams {
     */
   def runStreamJoinSmoke(spark: SparkSession, parquetPath: String, queryName: String,
       keys: Seq[String], leftType: String, rightType: String,
-      windowSeconds: Long, drain: String = "parquet"): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+      windowSeconds: Long, drain: String = "parquet",
+      sourceSchema: Option[StructType] = None): DataFrame = {
+    val schema = sourceSchema.getOrElse(spark.read.parquet(parquetPath).schema)
     def stream(): DataFrame =
       normalizeTs(schema, spark.readStream.schema(schema).parquet(parquetPath))
     val joined = streamStreamJoin(

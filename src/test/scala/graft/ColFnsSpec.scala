@@ -90,6 +90,32 @@ class ColFnsSpec extends SparkSpec {
     assert(order(asc = false, nf = false) == Seq(2, 1, -1))
   }
 
+  test("leq and neq: SQL <= and != over the reference fixture, null-propagating") {
+    val r = exampleDf.select(ColFns.leq(col("a"), col("b")), ColFns.neq(col("a"), lit(20L)))
+      .collect().map(x => (x.getBoolean(0), x.getBoolean(1))).toSeq
+    assert(r == Seq((true, true), (false, false)))
+    val nul = exampleDf.select(ColFns.leq(col("a"), lit(null)), ColFns.neq(col("a"), lit(null)))
+      .collect()
+    assert(nul.forall(x => x.isNullAt(0) && x.isNullAt(1)))
+  }
+
+  test("defineUdf1/2/3 register by name; udfCallByName calls the registered UDF") {
+    import org.apache.spark.sql.types._
+    import graft.functions.Udfs
+    val neg = Udfs.defineUdf1[Long](spark, "graft_spec_neg", LongType, a => -a)
+    Udfs.defineUdf2[Long, Long](spark, "graft_spec_sum2", LongType, (a, b) => a + b)
+    Udfs.defineUdf3[Long, Long, Long](spark, "graft_spec_sum3", LongType, (a, b, c) => a + b + c)
+    val r = exampleDf.select(
+        Udfs.udfCall(neg, Seq(col("a"))),
+        Udfs.udfCallByName("graft_spec_neg", Seq(col("a"))),
+        Udfs.udfCallByName("graft_spec_sum2", Seq(col("a"), col("b"))),
+        Udfs.udfCallByName("graft_spec_sum3", Seq(col("a"), col("b"), col("c"))))
+      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3))).toSeq
+    assert(r == Seq((-1L, -1L, 3L, 6L), (-20L, -20L, 30L, 80L)))
+    // the same registry serves SQL
+    assert(spark.sql("SELECT graft_spec_sum3(1L, 2L, 3L)").collect()(0).getLong(0) == 6L)
+  }
+
   test("typed UDF handle: declared arity enforced, declared types coerce args") {
     import org.apache.spark.sql.types._
     import graft.functions.Udfs

@@ -756,7 +756,8 @@ class RelationalSpec extends SparkSpec {
     val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
     // sorted non-decreasing WITH duplicates (numericDrift's edges are not
     // deduped), plus degenerate bounds arrays
-    for (bounds <- Seq(Seq(10L, 20L, 20L, 40L, 100L), Seq(0L), Seq.empty[Long]);
+    for (bounds <- Seq(Seq(10L, 20L, 20L, 40L, 100L), Seq(20L, 20L, 20L), Seq(40L, 40L, 41L, 41L),
+           Seq(0L), Seq.empty[Long]);
          strict <- Seq(false, true)) {
       val hof =
         if (strict) size(filter(typedLit(bounds), b => $"v" > b))
@@ -767,6 +768,28 @@ class RelationalSpec extends SparkSpec {
       val diffs = got.filter(t => t._2 != t._3)
       assert(diffs.isEmpty, s"bounds=$bounds strict=$strict diffs=${diffs.take(5).toSeq}")
     }
+  }
+
+  test("probeBucket: descending bounds are rejected") {
+    import graft.operators.Relational
+    val err = intercept[IllegalArgumentException](Relational.probeBucket($"v", Seq(1L, 5L, 3L)))
+    assert(err.getMessage.contains("non-decreasing") && err.getMessage.contains("bounds(1) = 5"))
+  }
+
+  test("showAll prints every row untruncated; showLimit prints the first n") {
+    val long = "x" * 40
+    val df = (1 to 25).map(i => (i, f"$long-$i%02d")).toDF("i", "s").sortBy(Seq($"i"))
+    def printed(show: => Unit): String = {
+      val buf = new java.io.ByteArrayOutputStream
+      Console.withOut(buf)(show)
+      buf.toString("UTF-8")
+    }
+    val all = printed(df.showAll())
+    assert((1 to 25).forall(i => all.contains(f"$long-$i%02d")))
+    assert(!all.contains("only showing"))
+    val two = printed(df.showLimit(2))
+    assert(two.contains("only showing top 2 rows"))
+    assert(two.linesIterator.count(_.contains("xxx")) == 2)
   }
 
   test("concurrencyProfile: sweep-line running count, half-open boundary, layout-independent") {
